@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .text import tokens
-from .util import spread
+from .util import materialize, spread
 
 __all__ = [
     "exact_dedup",
@@ -342,7 +342,7 @@ def jaccard_pairs(
     # computed stats, so the downstream size-joins stay broadcast — a
     # lazy cache's unknown stats flip them to sort-merge and cost ~2×
     # (measured at sf0.1)
-    sh_sets = _shingle_sets(df, text_col, id_col, shingle_size).localCheckpoint(eager=True)
+    sh_sets = materialize(_shingle_sets(df, text_col, id_col, shingle_size))
 
     if candidates is None and method == "auto":
         method = _choose_exact_method(sh_sets)
@@ -410,7 +410,7 @@ def containment_pairs(
     inflate c, so recall is complete; sizes broadcast), then exact
     string-set verification of candidates only. Both directions are
     emitted independently; scores are exact integer arithmetic."""
-    sh_sets = _shingle_sets(df, text_col, id_col, shingle_size).localCheckpoint(eager=True)
+    sh_sets = materialize(_shingle_sets(df, text_col, id_col, shingle_size))
     # sizes ride the exploded rows into the pair aggregate (see
     # jaccard_pairs — r9: no broadcast of a per-document side table)
     # explode-then-hash: codegen'd xxhash64 instead of an interpreted
@@ -703,9 +703,9 @@ def minhash_dedup_pairs(
     # signature job re-deriving mins from the sets). The checkpoint is
     # the persisted signature table of a real LSH pipeline; its
     # computed stats keep the downstream size-joins broadcast.
-    frame = _shingle_frame(
+    frame = materialize(_shingle_frame(
         df, text_col, id_col, shingle_size, n_hashes=n_hashes, with_set=True
-    ).localCheckpoint(eager=True)
+    ))
     sets = frame.select("__id", "__set")
     sigs = frame.select(
         F.col("__id").alias(id_col), *[f"mh_{i}" for i in range(n_hashes)]
@@ -736,9 +736,9 @@ def minhash_estimate_pairs(
     :func:`minhash_dedup_pairs` is exactly the cost this trades away
     for ±1/sqrt(n_hashes) estimator noise). Deterministic hash family
     → fully oracle-able."""
-    sigs = minhash_signatures(
+    sigs = materialize(minhash_signatures(
         df, n_hashes, shingle_size, text_col, id_col
-    ).localCheckpoint(eager=True)
+    ))
     cands = lsh_candidate_pairs(sigs, n_hashes, bands, id_col)
     a = sigs.select(
         F.col(id_col).alias("id_a"), *[F.col(f"mh_{i}").alias(f"__a{i}") for i in range(n_hashes)]
@@ -857,7 +857,7 @@ class SignatureStore:
         The checkpoint is delta-sized (n_hashes longs per doc)."""
         from ..sources.sql import SaveStrategy
 
-        sigs = self.sign(new_docs, text_col).localCheckpoint(eager=True)
+        sigs = materialize(self.sign(new_docs, text_col))
         self.table.save(sigs, SaveStrategy.UPSERT)
 
     def read(self) -> DataFrame:
@@ -919,16 +919,16 @@ def incremental_dedup_pairs(
     # one fused Arrow pass signs AND shingles the delta (r18): the
     # sets feed verification, the signature columns feed the probe —
     # previously a sets checkpoint plus a second signature derivation.
-    new_frame = _shingle_frame(
+    new_frame = materialize(_shingle_frame(
         new_docs, text_col, id_col, shingle_size, n_hashes=n_hashes, with_set=True
-    ).localCheckpoint(eager=True)
+    ))
     new_sets = new_frame.select("__id", "__set")
     new_sigs = new_frame.select(
         F.col("__id").alias(id_col), *[f"mh_{i}" for i in range(n_hashes)]
     )
-    cands = incremental_candidates(
+    cands = materialize(incremental_candidates(
         new_sigs, store.read(), n_hashes, bands, id_col
-    ).localCheckpoint(eager=True)
+    ))
     # candidate ids are normally DELTA-bounded by the banded-probe
     # contract, so the semi-filter broadcasts them: the corpus is
     # filtered in place instead of shuffling end to end just to meet a
@@ -939,9 +939,9 @@ def incremental_dedup_pairs(
     # cluster), so the broadcast is size-GUARDED: counting the
     # checkpointed ids is cheap, and past the threshold the plan
     # degrades to the shuffled semi-join instead of OOMing the driver.
-    cand_ids = cands.select(
-        F.col("corpus_id").alias(id_col)
-    ).distinct().localCheckpoint(eager=True)
+    cand_ids = materialize(
+        cands.select(F.col("corpus_id").alias(id_col)).distinct()
+    )
     if cand_ids.count() <= 5_000_000:
         cand_ids = F.broadcast(cand_ids)
     cand_corpus = corpus_docs.join(cand_ids, id_col, "left_semi")
@@ -1115,11 +1115,10 @@ def dup_clusters(
         F.struct(F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
         F.struct(F.col("id_b").alias("src"), F.col("id_a").alias("dst")),
     )
-    edges = (
+    edges = materialize(
         pairs.select(F.explode(both).alias("__e"))
         .select(F.col("__e.src").alias("src"), F.col("__e.dst").alias("dst"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     if strategy == "star":
         labeled = _cc_star(edges, max_iterations)
@@ -1169,7 +1168,7 @@ def _cc_min_label(
         # checkpoint — and the final round's labels left the function
         # lazy, re-running that join per downstream consumer. The
         # checkpoint also cuts the growing lineage (O(1) per round).
-        updated = updated.localCheckpoint(eager=True)
+        updated = materialize(updated)
         changed = updated.filter(F.col("new_label") != F.col("label")).limit(1).count()
         labels = updated.select("node", F.col("new_label").alias("label"))
         if changed == 0:
@@ -1202,11 +1201,10 @@ def _cc_star(edges: DataFrame, max_iterations: int) -> DataFrame:
     The fixpoint is a forest of stars centered at each component's
     minimum id, so the final edge list IS the (node, label) map."""
     # canonical undirected form (small, large)
-    e = (
+    e = materialize(
         edges.select(F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v"))
         .filter(F.col("u") != F.col("v"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     for _ in range(max_iterations):
         # -- large-star: group by the SMALLER endpoint's neighborhoods.
@@ -1230,12 +1228,11 @@ def _cc_star(edges: DataFrame, max_iterations: int) -> DataFrame:
             .select("u", F.least("mv", "u").alias("m"))
         )
         joined = oriented.join(mins2, "u")
-        small = (
+        small = materialize(
             joined.select(F.least("v", "m").alias("u"), F.greatest("v", "m").alias("v"))
             .union(joined.select(F.least(F.col("u"), F.col("m")).alias("u"), F.greatest(F.col("u"), F.col("m")).alias("v")))
             .filter(F.col("u") != F.col("v"))
             .distinct()
-            .localCheckpoint(eager=True)
         )
         converged = (
             small.exceptAll(e).limit(1).count() == 0
@@ -1244,6 +1241,13 @@ def _cc_star(edges: DataFrame, max_iterations: int) -> DataFrame:
         e = small
         if converged:
             break
+    else:
+        # same contract as _cc_min_label: split components would let
+        # duplicates survive, so running out of rounds is an error
+        raise RuntimeError(
+            f"star contraction did not converge in {max_iterations} "
+            "iterations; raise max_iterations"
+        )
     # fixpoint stars: u is the component min for every (u, v) edge
     return e.select(F.col("v").alias("node"), F.col("u").alias("label")).union(
         e.select(F.col("u").alias("node"), F.col("u").alias("label"))
@@ -1667,10 +1671,10 @@ def semantic_dup_pairs(
         else:
             from .similarity import kmeans_train
 
-            centroids = kmeans_train(
+            centroids = materialize(kmeans_train(
                 corpus, k=k, iters=iters, id_col=id_col, vec_col=vec_col,
                 quantize=quantize,
-            ).localCheckpoint()
+            ))
     assign = _assign if _assign is not None else ivf_assign(
         corpus, centroids, id_col=id_col, vec_col=vec_col, quantize=quantize, n_probe=1
     )
@@ -1803,9 +1807,9 @@ def semantic_prune(
             _cents=cents,
         )
     else:
-        assign = ivf_assign(
+        assign = materialize(ivf_assign(
             corpus, centroids, id_col=id_col, vec_col=vec_col, quantize=quantize, n_probe=1
-        ).localCheckpoint()
+        ))
         pairs = semantic_dup_pairs(
             corpus,
             threshold=threshold,
@@ -1846,8 +1850,6 @@ def overlap_pairs(
     exceeds it (one tiny aggregate, broadcast anti-probe — the
     remove_common_segments blocklist shape); None disables the guard.
     Returns (a_id, b_id, overlap)."""
-    from .util import spread
-
     toks = F.split(F.trim(F.col(text_col)), r"\s+")
     base = (
         spread(df)
@@ -2012,7 +2014,6 @@ def fuzzy_pairs(
     key_len: int = 16,
     block_cap: int = 64,
     pct_threshold: int = 30,
-    barrier: bool = True,
     generators: tuple[str, ...] = ("prefix", "suffix"),
 ) -> DataFrame:
     """Edit-distance near-duplicate pairs via blocking + verification —
@@ -2083,7 +2084,7 @@ def fuzzy_pairs(
     # at a 4.5M-doc synthetic; an explicit partition count is the one
     # thing AQE will not coalesce). The extra shuffle moves only the
     # candidate set — duplicate-density bounded, never the corpus.
-    # The lazy localCheckpoint is a LINEAGE BARRIER, the same device as
+    # The lazy materialize is a LINEAGE BARRIER, the same device as
     # rank.global_rank's: without it Catalyst substitutes the dist
     # alias and pushes the threshold filter through the repartition
     # INTO the id-join as a non-equi condition — the whole DP then runs
@@ -2092,19 +2093,16 @@ def fuzzy_pairs(
     # twice and runs 78 s where this one runs ~10 s at the 4.5M-doc
     # synthetic). Materializing here is safe by the same contract that
     # makes the set joinable at all: candidates, never the corpus.
-    # ``barrier=False`` keeps the plan fully lazy (no checkpoint) —
-    # for plan auditing (tools/plan_report.py reads the whole lineage
-    # the barrier would hide) and for callers composing fuzzy_pairs
-    # into a larger plan who manage their own materialization.
-    # Executing it directly re-exposes both defects above.
-    verify_in = (
+    # Under util.plan_audit() the barrier drops out so plan tooling
+    # reads the whole lineage; executing that form re-exposes both
+    # defects above.
+    verify_in = materialize(
         cand.join(slim.withColumnRenamed("__id", "doc_a"), "doc_a")
         .withColumnsRenamed({"__norm": "__na", "__len": "__la"})
         .join(slim.withColumnRenamed("__id", "doc_b"), "doc_b")
-        .repartition(df.sparkSession.sparkContext.defaultParallelism)
+        .repartition(df.sparkSession.sparkContext.defaultParallelism),
+        eager=False,
     )
-    if barrier:
-        verify_in = verify_in.localCheckpoint(eager=False)
     # Banded Levenshtein: the per-pair threshold floor(pct·max_len/100)
     # caps the DP at O(k·min_len) instead of O(len²) (Spark returns -1
     # when the distance exceeds it, and the returned distance is EXACT
@@ -2139,7 +2137,6 @@ def fuzzy_join(
     key_len: int = 16,
     block_cap: int = 64,
     pct_threshold: int = 30,
-    barrier: bool = True,
     generators: tuple[str, ...] = ("prefix", "suffix"),
     count_ref: DataFrame | None = None,
 ) -> DataFrame:
@@ -2166,7 +2163,7 @@ def fuzzy_join(
 
     Candidate count is bounded by probe_rows × 2 generators ×
     ``block_cap``; the verify stage repartitions explicitly behind
-    the same lazy localCheckpoint barrier as fuzzy_pairs (AQE's
+    the same lazy materialize barrier as fuzzy_pairs (AQE's
     size-based coalescing would serialize the CPU-bound DP; Catalyst
     would push the threshold filter into the id-joins). Returns
     (probe_id, ref_id, dist, max_len).
@@ -2234,13 +2231,12 @@ def fuzzy_join(
         F.col("__norm").alias("__nr"),
         F.length("__norm").alias("__lr"),
     )
-    verify_in = (
+    verify_in = materialize(
         cand.join(slim_p, "probe_id")
         .join(slim_r, "ref_id")
-        .repartition(probe.sparkSession.sparkContext.defaultParallelism)
+        .repartition(probe.sparkSession.sparkContext.defaultParallelism),
+        eager=False,
     )
-    if barrier:
-        verify_in = verify_in.localCheckpoint(eager=False)
     band = (
         f"levenshtein(__np, __nr, "
         f"cast(({int(pct_threshold)} * greatest(__lp, __lr)) div 100 as int))"

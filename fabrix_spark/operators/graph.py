@@ -31,14 +31,16 @@ engines by construction.
 100 TB shape: edges shuffle-partition on src once
 (``edges_with_outdeg``), each iteration reuses that partitioning for
 the join and shuffles contributions on dst; cost is
-O(iters × |E|) with no quadratic term. For many iterations persist
-the prepared edge set so Spark doesn't replay the scan per step.
+O(iters × |E|) with no quadratic term. The prepared edge set is
+materialized once, so Spark doesn't replay the scan per step.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .util import materialize
 
 __all__ = [
     "to_undirected",
@@ -90,7 +92,6 @@ def pagerank(
     unit: int = 10**12,
     src: str = "src",
     dst: str = "dst",
-    checkpoint: bool = False,
     redistribute: bool = False,
     seeds: DataFrame | None = None,
 ) -> DataFrame:
@@ -118,12 +119,10 @@ def pagerank(
     cross-joins into the update — no extra driver round-trip, and the
     recurrence stays SQL-unrollable.
 
-    ``checkpoint=True`` localCheckpoints the prepared edge set, node
-    set, and each iteration's ranks, truncating lineage so iteration
-    k's plan is ONE join + ONE aggregate instead of a replay of every
-    previous iteration's derivation — the right shape beyond 2-3
-    iterations or when the edge list is itself a derived plan. Results
-    are bit-identical either way (integer arithmetic)."""
+    The prepared edge set, node set, and each iteration's ranks are
+    materialized, truncating lineage so iteration k's plan is ONE
+    join + ONE aggregate instead of a replay of every previous
+    iteration's derivation."""
     # NULL-endpoint edges are EXCLUDED (the sampling operators' null
     # contract): a NULL src never equi-joins the out-degree table so
     # the edge propagates nothing, yet NULL would still enter the node
@@ -140,8 +139,7 @@ def pagerank(
     # barrier the caller's edge-derivation subtree (typically a fact
     # join + distinct) re-executes once for the nodes checkpoint and
     # twice more through e_deg's two join sides
-    if checkpoint:
-        e = e.localCheckpoint()
+    e = materialize(e)
     nodes = (
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
@@ -150,8 +148,7 @@ def pagerank(
     outdeg = e.groupBy("src").agg(F.count("*").alias("outdeg"))
     # one tiny driver scalar (like dup_clusters' per-iteration count):
     # N parameterizes the integer base rank
-    if checkpoint:
-        nodes = nodes.localCheckpoint()
+    nodes = materialize(nodes)
     n = nodes.count()
     if n == 0:
         raise ValueError("pagerank requires a non-empty edge list")
@@ -162,9 +159,9 @@ def pagerank(
                 "dangling mass teleports to the seed set, not uniformly"
             )
         seed_col = seeds.columns[0]
-        seed_nodes = seeds.select(F.col(seed_col).alias("node")).distinct()
-        if checkpoint:
-            seed_nodes = seed_nodes.localCheckpoint()
+        seed_nodes = materialize(
+            seeds.select(F.col(seed_col).alias("node")).distinct()
+        )
         n_seeds = seed_nodes.count()
         if n_seeds == 0:
             raise ValueError("personalized pagerank requires a non-empty seed set")
@@ -177,9 +174,7 @@ def pagerank(
     else:
         r0_col = F.lit(unit // n)
         base_col = F.lit((unit // n) * (100 - damping_pct) // 100)
-    e_deg = e.join(outdeg, "src")
-    if checkpoint:
-        e_deg = e_deg.localCheckpoint()
+    e_deg = materialize(e.join(outdeg, "src"))
     ranks = nodes.select("node", r0_col.cast("long").alias("rank"))
     for _ in range(iters):
         contrib = e_deg.join(
@@ -217,8 +212,7 @@ def pagerank(
                     + F.expr(f"coalesce(s, 0L) * {damping_pct} div 100")
                 ).cast("long").alias("rank"),
             )
-        if checkpoint:
-            ranks = ranks.localCheckpoint()
+        ranks = materialize(ranks)
     return ranks
 
 
@@ -227,7 +221,6 @@ def triangle_counts(
     src: str = "src",
     dst: str = "dst",
     prepared: bool = False,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Per-node triangle counts (the clustering-coefficient /
     community-density primitive) via DEGREE-ORIENTED wedge closing —
@@ -250,12 +243,7 @@ def triangle_counts(
     by the caller — and skips the least/greatest + distinct pass and
     its checkpoint (a redundant full |E| shuffle + second
     materialization when the caller just built exactly that edge
-    list, as gr_clustering_coefficient does). ``checkpoint=False``
-    (mirroring :func:`pagerank`) opts out of the eager
-    ``localCheckpoint`` barriers for small/ad-hoc inputs where
-    plan-build-time Spark jobs or executor-local unreplicated storage
-    are unwanted; the default stays True — without the barriers the
-    caller's edge subtree re-executes per branch."""
+    list, as gr_clustering_coefficient does)."""
     if prepared:
         e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     else:
@@ -266,7 +254,7 @@ def triangle_counts(
         # self-join + distinct) re-executed three times before a
         # single wedge was enumerated — the same defect class as
         # pagerank's prepared edge set.
-        e = (
+        e = materialize(
             edges.select(
                 F.least(F.col(src), F.col(dst)).alias("a"),
                 F.greatest(F.col(src), F.col(dst)).alias("b"),
@@ -274,8 +262,6 @@ def triangle_counts(
             .filter(F.col("a") != F.col("b"))
             .distinct()
         )
-        if checkpoint:
-            e = e.localCheckpoint()
     deg = (
         e.select(F.col("a").alias("n"))
         .unionAll(e.select(F.col("b").alias("n")))
@@ -307,13 +293,11 @@ def triangle_counts(
     # two-column form is scalar codegen compares (r17 — interleaved
     # A/B on the near-complete sf0.1 graph: 25.4-27.4 s -> 16.4-16.6 s
     # for the whole query, ~38%)
-    oriented = withdeg.select(
+    oriented = materialize(withdeg.select(
         F.when(ka < kb, F.col("a")).otherwise(F.col("b")).alias("u"),
         F.when(ka < kb, F.col("b")).otherwise(F.col("a")).alias("v"),
         F.when(ka < kb, F.col("db")).otherwise(F.col("da")).alias("dv"),
-    )
-    if checkpoint:
-        oriented = oriented.localCheckpoint()
+    ))
     o1 = oriented.select(
         F.col("u"), F.col("v").alias("x"), F.col("dv").alias("dx")
     )
@@ -347,7 +331,6 @@ def bfs_distances(
     edges: DataFrame,
     seeds: DataFrame,
     max_hops: int = 3,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Multi-source BFS: the minimum hop distance (0..max_hops) from
     any seed node, following ``edges`` (src → dst) as given —
@@ -361,37 +344,30 @@ def bfs_distances(
     the same contract as Pregel BFS. Equal, by induction, to
     ``max_hops`` rounds of Bellman-Ford relaxation — which is how the
     SQL oracle unrolls it. Lineage is truncated per round
-    (``localCheckpoint``), the iterative hygiene every loop here uses.
+    (:func:`~fabrix_spark.operators.util.materialize`), the iterative
+    hygiene every loop here uses.
 
     ``seeds`` must expose a ``node`` column; seed rows not present in
     the graph still report dist 0 (reachability is defined on the seed
     set, not the edge list).
     """
-    e = edges.select("src", "dst")
-    if checkpoint:
-        e = e.localCheckpoint(eager=True)
-    dist = seeds.select("node").distinct().withColumn("dist", F.lit(0))
-    if checkpoint:
-        dist = dist.localCheckpoint(eager=True)
+    e = materialize(edges.select("src", "dst"))
+    dist = materialize(seeds.select("node").distinct().withColumn("dist", F.lit(0)))
     frontier = dist.select("node")
     for h in range(1, max_hops + 1):
-        nxt = (
+        nxt = materialize(
             e.join(frontier.withColumnRenamed("node", "src"), "src")
             .select(F.col("dst").alias("node"))
             .distinct()
             .join(dist.select("node"), "node", "left_anti")
             .withColumn("dist", F.lit(h))
         )
-        if checkpoint:
-            nxt = nxt.localCheckpoint(eager=True)
         frontier = nxt.select("node")
         dist = dist.unionByName(nxt)
     return dist.select("node", F.col("dist").cast("int").alias("dist"))
 
 
-def min_label_propagation(
-    edges: DataFrame, iters: int = 3, checkpoint: bool = True
-) -> DataFrame:
+def min_label_propagation(edges: DataFrame, iters: int = 3) -> DataFrame:
     """Synchronous min-label propagation over an undirected graph:
     every node starts labeled with its own id, and each round sets
     label(v) = min(label(v), min over neighbors of their previous
@@ -403,30 +379,24 @@ def min_label_propagation(
 
     Per round: ONE shuffle (the message aggregate on the receiving
     node); the edge list is reused unchanged so its partitioning is
-    stable, and ``checkpoint`` truncates the growing lineage each
-    round (the iterative-algorithm hygiene every Pregel-style loop on
-    Spark needs). Returns (node, label)."""
-    sym = to_undirected(edges)
-    if checkpoint:
-        sym = sym.localCheckpoint(eager=True)
-    labels = (
+    stable, and materializing each round truncates the growing lineage
+    (the iterative-algorithm hygiene every Pregel-style loop on Spark
+    needs). Returns (node, label)."""
+    sym = materialize(to_undirected(edges))
+    labels = materialize(
         sym.select(F.col("src").alias("node"))
         .distinct()
         .select("node", F.col("node").alias("label"))
     )
-    if checkpoint:
-        labels = labels.localCheckpoint(eager=True)
     for _ in range(iters):
         msgs = sym.join(
             labels.withColumnRenamed("node", "dst"), "dst"
         ).select(F.col("src").alias("node"), "label")
-        labels = (
+        labels = materialize(
             labels.unionByName(msgs)
             .groupBy("node")
             .agg(F.min("label").alias("label"))
         )
-        if checkpoint:
-            labels = labels.localCheckpoint(eager=True)
     return labels
 
 
@@ -434,7 +404,6 @@ def k_core(
     edges: DataFrame,
     k: int,
     iters: int = 5,
-    checkpoint: bool = True,
     until_stable: bool = False,
     max_rounds: int = 100,
 ) -> DataFrame:
@@ -462,17 +431,12 @@ def k_core(
 
     Per round: one degree aggregate (map-side combined) + two
     semi-joins restricting the edge list — the edge table only ever
-    SHRINKS, and ``checkpoint`` truncates the growing lineage (the
-    Pregel-loop hygiene; with it off, nothing materializes eagerly —
-    fixed-iteration lineage stays lazy). Keep ``checkpoint=True`` for
-    ``until_stable`` runs of more than a few rounds: each
-    uncheckpointed round nests the previous plan ~4×, so optimization
-    of the lazy lineage itself goes exponential in round count. No
-    node ever broadcasts; survivors of a 100 TB graph peel in
-    parallel."""
-    cur = to_undirected(edges)
-    if checkpoint:
-        cur = cur.localCheckpoint(eager=True)
+    SHRINKS, and materializing each round truncates the growing
+    lineage (the Pregel-loop hygiene: an unmaterialized round nests
+    the previous plan ~4×, so optimizing the lazy lineage itself would
+    go exponential in round count). No node ever broadcasts; survivors
+    of a 100 TB graph peel in parallel."""
+    cur = materialize(to_undirected(edges))
     prev_edges = cur.count() if until_stable else None
     rounds = max_rounds if until_stable else iters
     for _ in range(rounds):
@@ -482,11 +446,11 @@ def k_core(
             .where(F.col("__deg") >= k)
             .select("src")
         )
-        cur = cur.join(keep, "src", "left_semi").join(
-            keep.withColumnRenamed("src", "dst"), "dst", "left_semi"
+        cur = materialize(
+            cur.join(keep, "src", "left_semi").join(
+                keep.withColumnRenamed("src", "dst"), "dst", "left_semi"
+            )
         )
-        if checkpoint:
-            cur = cur.localCheckpoint(eager=True)
         if until_stable:
             n_edges = cur.count()
             if n_edges == prev_edges:

@@ -15,13 +15,16 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .util import materialize
+
 __all__ = ["profile", "histogram", "quantiles", "sampled_quantiles", "kmv_distinct", "kmv_distinct_grouped", "check_constraints", "row_constraints", "kmv_sketch", "kmv_merge_estimate", "correlation", "hist_sketch", "hist_merge", "hist_quantiles", "hist_sketch_grouped", "hist_quantiles_grouped", "heavy_hitters", "mad_outliers", "skew_report", "winsorize"]
 
 
-_SCAN_SHAPED_NODES = {
-    # logical nodes whose re-execution is a free column-pruned re-scan:
-    # re-running one of these per profiled column costs the same bytes
-    # as one wide scan (each branch prunes to its own column)
+_SCAN_SHAPED_NODES = (
+    # logical-node name prefixes whose re-execution is a free
+    # column-pruned re-scan: re-running one of these per profiled column
+    # costs the same bytes as one wide scan (each branch prunes to its
+    # own column). Prefixes, so DataSource V2's ``RelationV2`` counts
     "Project",
     "Filter",
     "Relation",
@@ -30,7 +33,7 @@ _SCAN_SHAPED_NODES = {
     "LocalRelation",
     "SubqueryAlias",
     "View",
-}
+)
 
 
 def _is_scan_shaped(df: DataFrame) -> bool:
@@ -44,8 +47,8 @@ def _is_scan_shaped(df: DataFrame) -> bool:
 
     plan = df._jdf.queryExecution().optimizedPlan().toString()
     for line in plan.splitlines():
-        m = _re.match(r"^[\s:+-]*([A-Za-z]+)", line)
-        if m and m.group(1) not in _SCAN_SHAPED_NODES:
+        m = _re.match(r"^[\s:+-]*(\w+)", line)
+        if m and not m.group(1).startswith(_SCAN_SHAPED_NODES):
             return False
     return True
 
@@ -53,9 +56,12 @@ def _is_scan_shaped(df: DataFrame) -> bool:
 def profile(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
     """Long-format profile: one row per column with
     (column, n_rows, n_nulls, n_distinct, min_value, max_value)."""
-    cols = columns or df.columns
+    cols = df.columns if columns is None else columns
     if not cols:
-        raise ValueError("profile() needs at least one column (got a zero-column DataFrame)")
+        raise ValueError(
+            "profile() needs at least one column (got an empty column "
+            "list or a zero-column DataFrame)"
+        )
     # Derived inputs (join/aggregate results — anything beyond a
     # projected/filtered scan) are materialized ONCE as the pruned
     # projection (r18, advisor item): the per-column union below
@@ -66,7 +72,7 @@ def profile(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
     # Bare scans skip this (checkpointing a 100 TB table to profile it
     # would be the bug), keeping the r17 pruned-scan plan shape.
     if not _is_scan_shaped(df):
-        df = df.select(*cols).localCheckpoint(eager=True)
+        df = materialize(df.select(*cols))
     # ONE single-distinct aggregate per column, unioned (r17): packing
     # N count_distincts into one agg triggers the multi-distinct
     # rewrite — an N+1-way Expand whose re-keyed path drags every

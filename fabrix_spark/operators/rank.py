@@ -36,6 +36,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .util import materialize
+
 __all__ = ["global_rank", "global_ntile", "ntile_from_rank", "global_cumsum"]
 
 _MONO = "__fx_mono__"
@@ -121,11 +123,10 @@ def global_rank(
     (pinned by ``test_global_rank_offset_join_path``).
     """
     n_parts = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    s = (
+    s = materialize(
         df.repartitionByRange(n_parts, *order)
         .sortWithinPartitions(*order)
         .withColumn(_MONO, F.monotonically_increasing_id())
-        .localCheckpoint()
     )
     pid = F.shiftright(F.col(_MONO), 33).alias("__pid")
     counts = sorted(
@@ -183,12 +184,9 @@ def global_cumsum(
     from pyspark.sql import Window
 
     n_parts = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    s = (
-        df.repartitionByRange(n_parts, *order)
-        .sortWithinPartitions(*order)
-        .localCheckpoint()
-        .withColumn("__fx_pid__", F.spark_partition_id())
-    )
+    s = materialize(
+        df.repartitionByRange(n_parts, *order).sortWithinPartitions(*order)
+    ).withColumn("__fx_pid__", F.spark_partition_id())
     totals = sorted(
         (r["__fx_pid__"], tuple(r[f"__t_{c}"] for c in value_cols))
         for r in s.groupBy("__fx_pid__")

@@ -14,6 +14,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .util import materialize
+
 __all__ = [
     "hash_bucket",
     "deterministic_sample",
@@ -373,9 +375,9 @@ def interleave_sources(
     # per JOB (seeded by RDD id), so the count pass and the final pass
     # below would otherwise re-sample and could place rows in different
     # partitions once data outgrows the boundary sample — exactly the
-    # 100 TB case. localCheckpoint materializes ONE assignment both
-    # passes read.
-    arranged = arranged.localCheckpoint(eager=False)
+    # 100 TB case. A lazy materialize pins ONE assignment both passes
+    # read.
+    arranged = materialize(arranged, eager=False)
     counts = {
         r["__pid"]: r["c"]
         for r in arranged.groupBy("__pid").agg(F.count("*").alias("c")).collect()
@@ -598,12 +600,12 @@ def waterfill_caps(group_tokens: DataFrame, budget: int, group_col: str = "grp")
     # INPUT is typically a corpus-wide aggregate
     # (token_budget_sample's groupBy) that would otherwise re-execute
     # its scan+shuffle per action. Group-table sized by contract.
-    ranked = (
+    ranked = materialize(
         t.withColumn("__i", F.row_number().over(w))
         .withColumn("__prefix", F.sum("tokens").over(
             w.rowsBetween(Window.unboundedPreceding, 0)
         ))
-    ).localCheckpoint(eager=True)
+    )
     g_total = ranked.count()
     # feasible rows: groups small enough to keep whole at their level
     feas = ranked.filter(

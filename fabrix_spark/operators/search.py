@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .util import spread
+from .util import materialize, spread
 
 __all__ = ["tokens_expr", "build_token_index", "search_all_terms", "search_any_terms", "doc_token_counts", "bm25_scores", "bm25_scores_fused", "positional_index", "search_phrase"]
 
@@ -227,13 +227,13 @@ def bm25_scores_fused(
     # task time). The checkpoint is |docs| narrow rows — exactly the
     # "persist per-doc lengths next to the index" shape the 100 TB
     # steady state wants (see bm25_scores' docstring).
-    per_doc = ex.groupBy(id_col).agg(
+    per_doc = materialize(ex.groupBy(id_col).agg(
         F.count("*").alias("__len"),
         *[
             F.sum(F.when(F.col("token") == t, 1).otherwise(0)).alias(f"__tf_{i}")
             for i, t in enumerate(uniq)
         ],
-    ).localCheckpoint(eager=False)
+    ), eager=False)
     stats = per_doc.agg(
         F.count("*").alias("__n"),
         F.sum("__len").alias("__sumlen"),

@@ -16,7 +16,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .util import spread
+from .util import materialize, spread
 
 __all__ = [
     "cosine_topk",
@@ -1096,7 +1096,6 @@ def mmr_rerank(
     vec_col: str = "embedding",
     query_id_col: str | None = None,
     quantize: int = 1_000_000,
-    barrier: bool = True,
 ) -> DataFrame:
     """Maximal Marginal Relevance rerank (Carbonell & Goldstein 1998):
     per query, take the ``pool`` most-relevant candidates by cosine,
@@ -1125,13 +1124,10 @@ def mmr_rerank(
     # the whole corpus top-k scan (~5-6 full passes, measured 11 s vs
     # 5 s at sf0.1); after it the top-k pass runs ONCE and every
     # consumer reads the (queries x pool)-row checkpoint.
-    # ``barrier=False`` is the plan-audit twin (result-identical, fully
-    # lazy) — the repo-wide convention tools/plan_report.py probes for.
-    bar = (lambda df: df.localCheckpoint(eager=False)) if barrier else (lambda df: df)
-    rel = bar(cosine_topk(
+    rel = materialize(cosine_topk(
         corpus, queries, k=pool, id_col=id_col, vec_col=vec_col,
         query_id_col=query_id_col, quantize=quantize,
-    ).select("q_id", "c_id", "cosine", "rank"))
+    ).select("q_id", "c_id", "cosine", "rank"), eager=False)
     # pool-member vectors once; pairwise sims within each query's pool.
     # The pool-id semi join runs BEFORE the quantizer (r17): only the
     # <= queries x pool distinct pool members pay the per-component
@@ -1159,7 +1155,7 @@ def mmr_rerank(
             _cosine(F.col("__av"), F.col("__bv"), F.col("__an2"), F.col("__bn2"), True).alias("sim"),
         )
     )
-    sims = bar(sims)
+    sims = materialize(sims, eager=False)
     lam_c, div_c = F.lit(float(lam)), F.lit(1.0 - float(lam))
     selected = rel.filter(F.col("rank") == 1).select(
         "q_id", "c_id", "cosine", F.lit(1).cast("long").alias("step")
@@ -1188,7 +1184,7 @@ def mmr_rerank(
             "q_id", F.col("__p.c_id").alias("c_id"), F.col("__p.cosine").alias("cosine"),
             F.lit(s).cast("long").alias("step"),
         )
-        selected = bar(selected.unionByName(pick))
+        selected = materialize(selected.unionByName(pick), eager=False)
         remaining = remaining.join(
             pick.select("q_id", "c_id"), ["q_id", "c_id"], "left_anti"
         )
@@ -1896,9 +1892,9 @@ def pq_cosine_topk(
     (a semi-join-sized read — R rows per query, never the corpus) and
     re-ranked to k. Returns (q_id, c_id, cosine, rank ≤ k) — exact
     scores over PQ-approximate candidates."""
-    cb = pq_train(
+    cb = materialize(pq_train(
         corpus, dim, m, n_codes, iters, id_col, vec_col, quantize
-    ).localCheckpoint(eager=True)
+    ))
     codes = pq_encode(corpus, cb, dim, m, id_col, vec_col, quantize)
     return _adc_topk(
         codes, cb, queries, corpus, dim, m, k, id_col, vec_col, quantize, refine
@@ -2052,9 +2048,9 @@ def ivfpq_topk(
         .distinct()
     )
 
-    cb = pq_train(
+    cb = materialize(pq_train(
         corpus, dim, m, n_codes, iters, id_col, vec_col, quantize
-    ).localCheckpoint(eager=True)
+    ))
     codes = pq_encode(corpus, cb, dim, m, id_col, vec_col, quantize)
 
     sub_dim = dim // m
@@ -2161,10 +2157,10 @@ class PQStore:
         job every later :meth:`ingest` amortizes."""
         from ..sources.sql import SaveStrategy
 
-        cb = pq_train(
+        cb = materialize(pq_train(
             corpus, self.dim, self.m, self.n_codes, self.iters,
             self.id_col, self.vec_col, self.quantize,
-        ).localCheckpoint(eager=True)
+        ))
         self.cb_table.save(cb, SaveStrategy.REPLACE)
         self.codes_table.save(
             pq_encode(corpus, cb, self.dim, self.m, self.id_col, self.vec_col, self.quantize),

@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .util import spread
+from .util import materialize, spread
 
 __all__ = [
     "tokens",
@@ -1025,7 +1025,7 @@ def bpe_encode(
             "symbols", bpe_apply_merge(F.col("symbols"), left, right)
         )
         if (i + 1) % checkpoint_every == 0:
-            syms = syms.localCheckpoint()
+            syms = materialize(syms)
     if len(merges) % checkpoint_every != 0:
         # ALWAYS end the loop on a checkpoint, not only every
         # checkpoint_every merges: the final posexplode(symbols) makes
@@ -1036,7 +1036,7 @@ def bpe_encode(
         # instead of once per distinct word (measured 24 s of the
         # encode stage's 28 s task time at sf0.1; the checkpoint is a
         # vocab-sized barrier the predicate cannot cross).
-        syms = syms.localCheckpoint()
+        syms = materialize(syms)
     if broadcast_vocab:
         syms = F.broadcast(syms)
     return corpus.join(syms, "word").select(
@@ -1085,10 +1085,10 @@ def bpe_train(
     # split(word, regex) keeps trailing empty strings (Java split with
     # limit -1) — the zero-width split leaves one "" after the last
     # char, which must not become a symbol
-    syms = words.select(
+    syms = materialize(words.select(
         F.array_remove(F.split(F.col("word"), "(?!^)"), "").alias("symbols"),
         F.col("freq"),
-    ).localCheckpoint()
+    ))
 
     spark = df.sparkSession
     merges: list[tuple[int, str, str, int]] = []
@@ -1119,10 +1119,10 @@ def bpe_train(
             break
         left, right, cnt = best[0]["l"], best[0]["r"], int(best[0]["cnt"])
         merges.append((it, left, right, cnt))
-        syms = syms.select(
+        syms = materialize(syms.select(
             bpe_apply_merge(F.col("symbols"), left, right).alias("symbols"),
             "freq",
-        ).localCheckpoint()
+        ))
     return spark.createDataFrame(
         merges, "iteration int, left string, right string, freq long"
     )

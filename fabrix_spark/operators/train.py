@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .util import materialize
+
 __all__ = ["gini_best_split", "logreg_gd", "nb_train_predict"]
 
 
@@ -323,13 +325,12 @@ def nb_train_predict(
     )
     cb = feats.groupBy(class_col, "feature").agg(F.sum("cnt").alias("__n"))
     # one corpus scan covers classes, per-class doc counts, AND the
-    # grand total (localCheckpoint pins the k-row result so the three
+    # grand total (materialize pins the k-row result so the three
     # consumers below don't each re-derive it from the corpus)
-    nd = (
+    nd = materialize(
         df.where(F.col(class_col).isNotNull())
         .groupBy(class_col)
         .agg(F.count("*").alias("__nc"))
-        .localCheckpoint(eager=True)
     )
     # dense class × bucket grid: absent buckets still carry the
     # add-one-smoothed log-likelihood (a scored doc may hit a bucket

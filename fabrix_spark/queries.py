@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .operators import dedup, multimodal, sampling, similarity, temporal, text
-from .operators.util import spread
+from .operators.util import materialize, spread
 from .plans import (
     AND,
     Col,
@@ -63,18 +63,12 @@ REGISTRY: dict[str, QueryDef] = {}
 
 def register(name: str, oracle: str | None = None, headline: bool = False):
     def deco(fn: QueryFn) -> QueryFn:
-        # functools.wraps + **kwargs pass-through: a query fn may
-        # declare extra keyword-only knobs beyond the (spark, sf_dir)
-        # driver contract — e.g. ``barrier=False`` on queries whose
-        # executing plan hides a subtree behind a lazy localCheckpoint
-        # lineage barrier. tools/plan_report.py probes the (wraps-
-        # preserved) signature for ``barrier`` and audits the
-        # un-barriered twin automatically, so no per-query override
-        # table exists to forget.
+        # functools.wraps keeps ``__wrapped__`` so tools/plan_report.py
+        # can find a driver-loop query's ``plan_audit_body``
         @functools.wraps(fn)
-        def wrapped(spark: SparkSession, sf_dir: str, **kwargs) -> DataFrame:
+        def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
             tune_session(spark)
-            return fn(spark, sf_dir, **kwargs)
+            return fn(spark, sf_dir)
 
         # silent overwrite would shadow an existing query (and its
         # driver CORRECTNESS history) — refuse loudly
@@ -5424,9 +5418,9 @@ def pipeline_llm_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     h = F.md5(F.col("norm").cast("binary"))
     # one corpus pass: hash the normalized text here and drop it — the
     # checkpoint carries only the per-doc decision columns
-    hashed = filtered.select(
+    hashed = materialize(filtered.select(
         "doc_id", "n_tokens", "pred_lang", h.alias("own_h")
-    ).localCheckpoint()
+    ))
     reps = (
         hashed.select(F.col("own_h").alias("rep_h"), "doc_id")
         .groupBy("rep_h")
@@ -6492,9 +6486,9 @@ def gr_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     # `pairs`' lineage is the lineitem self-join + distinct, and
     # without the barrier it executed separately for the degree branch
     # and again (three times, pre-fix) inside triangle_counts.
-    e = pairs.select(
+    e = materialize(pairs.select(
         F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-    ).distinct().localCheckpoint()
+    ).distinct())
     deg = (
         e.select(F.col("a").alias("node"))
         .unionAll(e.select(F.col("b").alias("node")))
@@ -6547,7 +6541,7 @@ def gr_pagerank_purchases(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    pr = graph.pagerank(graph.to_undirected(pairs), iters=3, checkpoint=True)
+    pr = graph.pagerank(graph.to_undirected(pairs), iters=3)
     # top-100 via orderBy+limit (TakeOrdered: per-partition heads, no
     # global single-partition sort); the position window then runs
     # over just those 100 rows
@@ -6670,7 +6664,7 @@ def gr_ppr_seeded(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     seeds = pairs.select("src").filter(F.col("src") % 20 == 0).distinct()
-    pr = graph.pagerank(pairs, iters=3, checkpoint=True, seeds=seeds)
+    pr = graph.pagerank(pairs, iters=3, seeds=seeds)
     top = pr.orderBy(F.col("rank").desc(), F.col("node").asc()).limit(100)
     w = Window.orderBy(F.col("rank").desc(), F.col("node").asc())
     return top.withColumn("pos", F.row_number().over(w).cast("long"))
@@ -6697,7 +6691,7 @@ def gr_pagerank_redistributed(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    pr = graph.pagerank(pairs, iters=3, checkpoint=True, redistribute=True)
+    pr = graph.pagerank(pairs, iters=3, redistribute=True)
     top = pr.orderBy(F.col("rank").desc(), F.col("node").asc()).limit(100)
     w = Window.orderBy(F.col("rank").desc(), F.col("node").asc())
     return top.withColumn("pos", F.row_number().over(w).cast("long"))
@@ -7030,7 +7024,7 @@ def pipeline_multimodal_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register("sim_mmr_rerank", oracle=_mmr_oracle())
-def sim_mmr_rerank(spark: SparkSession, sf_dir: str, barrier: bool = True) -> DataFrame:
+def sim_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Maximal Marginal Relevance diversified retrieval: top-20 cosine
     pool per query, greedy 5-pick balancing relevance (0.7) against
     max similarity to already-picked passages (0.3) — the standard
@@ -7040,7 +7034,7 @@ def sim_mmr_rerank(spark: SparkSession, sf_dir: str, barrier: bool = True) -> Da
     just the final set."""
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 4)
-    return similarity.mmr_rerank(emb, queries, k=5, pool=20, lam=0.7, barrier=barrier)
+    return similarity.mmr_rerank(emb, queries, k=5, pool=20, lam=0.7)
 
 
 @register(
@@ -8929,12 +8923,10 @@ def stage(name: str, oracle: str | None = None, headline: bool = False):
     unique across BOTH dicts so a promotion can never shadow."""
 
     def deco(fn: QueryFn) -> QueryFn:
-        # same **kwargs pass-through as :func:`register` (plan_report's
-        # barrier-twin probe works on staged entries too)
         @functools.wraps(fn)
-        def wrapped(spark: SparkSession, sf_dir: str, **kwargs) -> DataFrame:
+        def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
             tune_session(spark)
-            return fn(spark, sf_dir, **kwargs)
+            return fn(spark, sf_dir)
 
         if name in REGISTRY or name in STAGED:
             raise ValueError(f"duplicate query registration: {name!r}")
@@ -10851,9 +10843,7 @@ WHERE 100 * levenshtein(da.norm, db.norm)
       <= 30 * greatest(length(da.norm), length(db.norm))
 """,
 )
-def d_fuzzy_pairs(
-    spark: SparkSession, sf_dir: str, barrier: bool = True
-) -> DataFrame:
+def d_fuzzy_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Edit-distance near-duplicate pairs over DOCUMENTS
     (dedup.fuzzy_pairs): the content-blocked sibling of
     d_fuzzy_name_pairs — that query blocks short identifiers on an
@@ -10880,7 +10870,6 @@ def d_fuzzy_pairs(
         key_len=16,
         block_cap=64,
         pct_threshold=30,
-        barrier=barrier,
     )
 
 
@@ -10923,9 +10912,7 @@ WHERE 100 * levenshtein(dp.norm, dr.norm)
       <= 30 * greatest(length(dp.norm), length(dr.norm))
 """,
 )
-def d_fuzzy_join(
-    spark: SparkSession, sf_dir: str, barrier: bool = True
-) -> DataFrame:
+def d_fuzzy_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Probe-vs-master fuzzy match over DOCUMENTS (dedup.fuzzy_join) —
     d_fuzzy_pairs' two-table JOIN form and the deployable admission
     primitive: every third document (doc_id % 3 == 0) plays the
@@ -10951,7 +10938,6 @@ def d_fuzzy_join(
         key_len=16,
         block_cap=64,
         pct_threshold=30,
-        barrier=barrier,
     )
 
 
@@ -11050,8 +11036,8 @@ def _fuzzy_replay_audit_body(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe (batch 1 against the batch-0 master) through the EXACT
     per-batch plan constructor the operator uses
     (``ingest.fuzzy_probe_plan``, shared code so audit and operator
-    cannot drift), fully lazy and un-barriered so PLANS.md sees the
-    whole lineage: outgoing-update detection join, count_ref purge
+    cannot drift); plan_report builds it under ``util.plan_audit()``
+    so PLANS.md sees the whole lineage: outgoing-update detection join, count_ref purge
     basis, blocking joins, banded-Levenshtein verify, survivor
     anti-join. Not counted here: the CDC merge's one key anti-join
     per batch (a write, not a returnable plan)."""
@@ -11061,8 +11047,6 @@ def _fuzzy_replay_audit_body(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep, _ = fuzzy_probe_plan(
         docs.filter(F.col("doc_id") % 3 == 1),
         docs.filter(F.col("doc_id") % 3 == 0),
-        barrier=False,
-        materialize=False,
     )
     return keep
 
@@ -11256,7 +11240,7 @@ def _fuzzy_update_replay_audit_body(spark: SparkSession, sf_dir: str) -> DataFra
     from .streaming.ingest import fuzzy_probe_plan
 
     b0, b1 = _fuzzy_update_batches(_t(spark, sf_dir, "documents"))
-    keep, _ = fuzzy_probe_plan(b1, b0, barrier=False, materialize=False)
+    keep, _ = fuzzy_probe_plan(b1, b0)
     return keep
 
 

@@ -26,6 +26,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
+from ..operators.util import materialize
+
 __all__ = [
     "EVENTS_SCHEMA",
     "read_stream_json",
@@ -287,7 +289,7 @@ def _admit_batch_locked(
             # common zero-rejections batch, dup_ids is empty (a cheap
             # driver probe on the checkpointed set) and the log pays
             # neither the batch×corpus join nor a commit.
-            dup_ids = dup_ids.localCheckpoint(eager=True)
+            dup_ids = materialize(dup_ids)
             if not dup_ids.isEmpty():
                 entries = (
                     batch.select(id_col, F.col(text_col).alias("__new"))
@@ -308,7 +310,7 @@ def _admit_batch_locked(
         keep = batch
     # two sinks read `keep` — materialize once instead of running
     # the probe plan twice
-    keep = keep.localCheckpoint(eager=True)
+    keep = materialize(keep)
     if stale_log is not None and stale_log.exists():
         # REVERT drain (found by round-16 self-review): an ACCEPTED
         # batch id just re-asserted its content, so any pending stale
@@ -470,12 +472,11 @@ def compact_admitted(
     with admitted.writer_lock(name=_ADMISSION_LOCK):
         log = stale_log.read().df
         adm = admitted.read().df
-        ids = (
+        ids = materialize(
             adm.select(id_col, F.xxhash64(F.col(text_col)).alias("__h"))
             .join(log, id_col)
             .filter(F.col("__h").eqNullSafe(F.col("stale_hash")))
             .select(id_col)
-            .localCheckpoint(eager=True)
         )
         removed = ids.count()
         if removed:
@@ -515,24 +516,20 @@ def fuzzy_probe_plan(
     block_col: str | None = "lang",
     text_col: str = "text",
     id_col: str = "doc_id",
-    barrier: bool = True,
-    materialize: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """The distributed per-batch probe of :func:`admit_batch_fuzzy`
     as a ``(keep, stale)`` plan pair — factored out so the operator
     and the plan audit can never drift (the r15 verdict's "driver-loop
     queries read as 0 shuffles": the replay queries' returned
     DataFrame is just the final admitted scan, so PLANS.md audits THIS
-    plan with ``materialize=False, barrier=False`` instead).
+    plan, built under ``util.plan_audit()``, instead).
 
-    ``materialize=True`` (production) eagerly localCheckpoints the two
-    multi-consumer subtrees: ``outgoing`` (read by the ref-side
-    exclusion, the stale semi-join, and transitively the CDC batch)
-    and the rejected-id set (read by the survivor anti-join and the
-    tombstone scan) — both batch-bounded by contract.
-    ``materialize=False`` keeps the whole lineage lazy for auditing;
+    Two multi-consumer subtrees are eagerly materialized: ``outgoing``
+    (read by the ref-side exclusion, the stale semi-join, and
+    transitively the CDC batch) and the rejected-id set (read by the
+    survivor anti-join and the tombstone scan) — both batch-bounded by
+    contract. Under ``util.plan_audit()`` the whole lineage stays lazy;
     executing that form re-runs those subtrees per consumer.
-    ``barrier`` forwards to :func:`~fabrix_spark.operators.dedup.fuzzy_join`.
 
     Semantics (the operator's steps 3/3b):
 
@@ -559,7 +556,7 @@ def fuzzy_probe_plan(
       distributed CDC merge, never a driver-collected id list)."""
     from ..operators import dedup as _dedup
 
-    outgoing = (
+    outgoing = materialize(
         batch.select(F.col(id_col), F.col(text_col).alias("__new_text"))
         .join(
             ref_df.select(F.col(id_col), F.col(text_col).alias("__ref_text")),
@@ -568,8 +565,6 @@ def fuzzy_probe_plan(
         .filter(~F.col("__ref_text").eqNullSafe(F.col("__new_text")))
         .select(id_col)
     )
-    if materialize:
-        outgoing = outgoing.localCheckpoint(eager=True)
     hits = _dedup.fuzzy_join(
         batch,
         ref_df.join(outgoing, id_col, "left_anti"),
@@ -580,12 +575,9 @@ def fuzzy_probe_plan(
         key_len=key_len,
         block_cap=block_cap,
         pct_threshold=pct_threshold,
-        barrier=barrier,
         count_ref=ref_df.join(batch.select(id_col), id_col, "left_anti"),
     ).filter(F.col("probe_id") != F.col("ref_id"))
-    dup_ids = hits.select(F.col("probe_id").alias(id_col)).distinct()
-    if materialize:
-        dup_ids = dup_ids.localCheckpoint(eager=True)
+    dup_ids = materialize(hits.select(F.col("probe_id").alias(id_col)).distinct())
     keep = batch.join(dup_ids, id_col, "left_anti")
     stale = outgoing.join(dup_ids, id_col, "left_semi")
     return keep, stale
@@ -704,7 +696,7 @@ def admit_batch_fuzzy(
     else:
         keep = batch
         stale = None
-    keep = keep.localCheckpoint(eager=True)
+    keep = materialize(keep)
     if stale is not None:
         # ONE CDC batch per micro-batch (r15 ADVICE): the tombstone
         # deletes ride WITH the survivor upserts through a single
@@ -979,7 +971,7 @@ def stream_validated_ingest(
     pred, reason = row_constraints(rules)
 
     def _consume(batch: DataFrame, bid: int) -> None:
-        batch = batch.localCheckpoint()
+        batch = materialize(batch)
         ok = batch.filter(pred)
         bad = batch.filter(~pred).withColumn("_fx_reason", reason)
         if not _committed(good, bid):
@@ -1200,7 +1192,7 @@ def profile_fold_consumer(
     from ..operators.profile import hist_sketch, kmv_sketch
 
     def _consume(batch: DataFrame, bid: int) -> None:
-        batch = batch.localCheckpoint()
+        batch = materialize(batch)
         if not _committed(hist_table, bid):
             extra = _commit_meta(hist_table, bid)
             delta = hist_sketch(batch, value_col, width=width, scale=scale)

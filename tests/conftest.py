@@ -9,7 +9,8 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("fabrix_spark_tests", master="local[8]")
+    # master from $FABRIX_MASTER / $SPARK_GRAFT_CPUS, as everywhere else
+    s = get_spark("fabrix_spark_tests")
     yield s
 
 

@@ -300,9 +300,9 @@ def test_checkpoint_wins_source_scanned_once(spark):
 
         return spark.createDataFrame(sc.parallelize(data, 2).map(bump), cols), acc
 
-    # pagerank(checkpoint=True): prepared edge set checkpointed FIRST
+    # pagerank: prepared edge set materialized FIRST
     edges, acc = counted_edges()
-    graph.pagerank(edges, iters=2, checkpoint=True).count()
+    graph.pagerank(edges, iters=2).count()
     assert acc.value == len(data), f"pagerank scanned source {acc.value / len(data):.1f}x"
 
     # triangle_counts: canonical edge list checkpointed once
@@ -407,6 +407,10 @@ def test_dup_clusters_star_long_chain(spark):
         for r in dedup.dup_clusters(nodes, pdf, max_iterations=10, strategy="star").collect()
     }
     assert got == {i: 0 for i in range(n)}
+    # one round cannot collapse the chain: star must refuse, like the
+    # label strategy, rather than return split components
+    with pytest.raises(RuntimeError, match="did not converge"):
+        dedup.dup_clusters(nodes, pdf, max_iterations=1, strategy="star").collect()
 
 
 def test_jaccard_prefix_matches_inverted(docs):
@@ -2199,6 +2203,58 @@ def test_fuzzy_pairs_model(spark):
     assert tight == {(1, 2)}
 
 
+def test_materialize_helper_and_plan_audit(spark, tmp_path):
+    """util.materialize is the one materialization point: an eager
+    call runs its job at once, and under plan_audit() it is the
+    identity. A fuzzy_pairs plan built in audit mode fires no Spark job
+    and its executed plan shows the blocking joins instead of the verify
+    barrier's checkpoint scan; outside audit mode the barrier is back
+    and the pairs are the same."""
+    from fabrix_spark.operators.dedup import fuzzy_pairs
+    from fabrix_spark.operators.util import materialize, plan_audit
+
+    sc = spark.sparkContext
+    base = "alpha beta gamma delta epsilon zeta"
+    rows = [
+        (1, base, "en"),
+        (2, base.replace("delta", "delt0"), "en"),
+        (3, "XXXXX" + base[5:], "en"),
+        (4, "totally different words here entirely", "en"),
+    ]
+    # a parquet source, so any ExistingRDD scan in a plan is a checkpoint
+    spark.createDataFrame(rows, "doc_id long, text string, lang string").write.parquet(
+        str(tmp_path / "docs")
+    )
+    df = spark.read.parquet(str(tmp_path / "docs"))
+
+    def jobs_during(group, build):
+        sc.setJobGroup(group, group)
+        try:
+            out = build()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+    _, jobs = jobs_during("fx_materialize_eager", lambda: materialize(df))
+    assert jobs, "an eager materialize must run its job at once"
+
+    with plan_audit():
+        assert materialize(df) is df and materialize(df, eager=False) is df
+        audited, jobs = jobs_during(
+            "fx_materialize_audit", lambda: fuzzy_pairs(df, key_len=8)
+        )
+    assert jobs == [], f"plan_audit() plan construction ran jobs {jobs}"
+    audit_plan = audited._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" not in audit_plan and "Join" in audit_plan
+
+    live = fuzzy_pairs(df, key_len=8)
+    live_plan = live._jdf.queryExecution().executedPlan().toString()
+    assert "Scan ExistingRDD" in live_plan and "Join" not in live_plan
+    got = sorted(tuple(r) for r in live.collect())
+    assert got == sorted(tuple(r) for r in audited.collect())
+    assert [(a, b) for a, b, _, _ in got] == [(1, 2), (1, 3), (2, 3)]
+
+
 def test_fuzzy_pairs_sorted_prefix_generator(spark):
     """The opt-in token-sorted blocking generator catches the
     both-ends-edited pairs the positional prefix/suffix generators
@@ -3215,6 +3271,29 @@ def test_profile_derived_input_materialized_and_empty_cols_guard(spark, sf_dir):
 
     with _pytest.raises(ValueError, match="zero-column"):
         profile(base.select())
+
+
+def test_profile_empty_column_list_and_v2_scan(spark, sf_dir):
+    """profile(columns=[]) refuses instead of profiling every column,
+    and a bare DataSource V2 scan (``RelationV2``) is scan-shaped, so
+    profiling it adds no checkpoint."""
+    from fabrix_spark.operators.profile import _is_scan_shaped, profile
+
+    base = spark.createDataFrame([(1, "a")], "k int, s string")
+    with pytest.raises(ValueError, match="at least one column"):
+        profile(base, [])
+
+    spark.conf.set("spark.sql.sources.useV1SourceList", "")
+    try:
+        v2 = spark.read.parquet(f"{sf_dir}/orders.parquet")
+        assert "RelationV2" in v2._jdf.queryExecution().optimizedPlan().toString()
+        assert _is_scan_shaped(v2)
+        assert _is_scan_shaped(v2.select("o_orderkey").filter("o_orderkey > 0"))
+        assert not _is_scan_shaped(v2.groupBy("o_custkey").count())
+        plan = profile(v2, ["o_orderkey"])._jdf.queryExecution().optimizedPlan().toString()
+        assert "LogicalRDD" not in plan
+    finally:
+        spark.conf.unset("spark.sql.sources.useV1SourceList")
 
 
 def test_winsorize_sketch_path_and_ewma_guard(spark):
@@ -5006,18 +5085,6 @@ def test_k_core_until_stable_runs_to_fixpoint(spark):
     )
     assert got == sorted(_py_k_core(edges, 2).items())
     assert got == [(100, 2), (101, 2), (102, 2)]
-    # checkpoint=False takes the same fixpoint on a SHORT chain (the
-    # per-round count still drives convergence) — short because each
-    # uncheckpointed round nests the previous plan ~4×, so a long
-    # chain's lazy lineage makes Catalyst optimization itself blow up:
-    # exactly why checkpoint=True is the default for the loop
-    short = [(100, 101), (101, 102), (100, 102), (102, 1), (1, 2)]
-    sdf = spark.createDataFrame(short, "src long, dst long")
-    got_nc = sorted(
-        r["node"]
-        for r in k_core(sdf, k=2, until_stable=True, checkpoint=False).collect()
-    )
-    assert got_nc == [100, 101, 102]
 
 
 def test_k_core_until_stable_max_rounds_guard(spark):

@@ -6,6 +6,7 @@ you'd want at 100 TB".
 
 from __future__ import annotations
 
+import contextlib
 import inspect
 import re
 import sys
@@ -13,6 +14,7 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
+from fabrix_spark.operators.util import plan_audit  # noqa: E402
 from fabrix_spark.queries import REGISTRY  # noqa: E402
 from fabrix_spark.session import get_spark  # noqa: E402
 
@@ -76,6 +78,20 @@ NOTABLE = [
     "sim_rp_topk",
 ]
 
+# Rows built with materialization ON, because their lazy form under
+# plan_audit() fails or is exponential: stream_admission_replay's admit
+# loop would re-read lake files its own upserts replaced, and each
+# round of pipeline_entity_resolution's star contraction and of
+# gr_k_core's peeling reads the previous round's state several times,
+# so the unmaterialized lineage multiplies per round (gr_k_core: 243
+# copies of its input after 5 rounds; the star loop does not finish).
+# These rows show the final stage only.
+BUILT_MATERIALIZED = {
+    "stream_admission_replay",
+    "pipeline_entity_resolution",
+    "gr_k_core",
+}
+
 
 def audit(plan: str) -> dict:
     joins = re.findall(r"(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin|BroadcastNestedLoopJoin)", plan)
@@ -101,43 +117,34 @@ def main() -> None:
         "",
         f"Generated by `tools/plan_report.py` at `{SF_DIR}`. Shuffle exchanges",
         "exclude broadcasts; scan widths are columns actually read per scan",
-        "(column pruning evidence).",
+        "(column pruning evidence). Plans are built under `util.plan_audit()`,",
+        "so no materialization point hides the lineage behind it.",
         "",
         "| query | shuffles | bcast | joins | partial agg | pushed filters | scan widths |",
         "|---|---|---|---|---|---|---|",
     ]
     def row(name, qd):
-        # Queries whose executing plan hides its distributed subtree
-        # behind a lazy localCheckpoint lineage barrier declare a
-        # ``barrier`` keyword (preserved through the registry wrapper
-        # by functools.wraps): audit the UN-BARRIERED twin instead —
-        # same blocking/join/exchange work, the barrier only pins
-        # where the verify projection evaluates — otherwise the row
-        # reads "0 shuffles" for a multi-join pipeline. Probing the
-        # signature (instead of a name list) means every future
-        # barrier-using query gets its audit twin for free.
-        try:
-            has_barrier = "barrier" in inspect.signature(qd.fn).parameters
-        except (TypeError, ValueError):
-            has_barrier = False
         # Driver-loop replay queries (per-batch foreachBatch bodies
         # executed in a loop) return only the final table scan — their
         # distributed work is invisible in the returned DataFrame's
         # plan, and the row would read "0 shuffles" for a multi-join
         # pipeline (the r15 verdict's finding). Such queries attach a
         # ``plan_audit_body`` callable (built on the SAME plan
-        # constructor the operator runs per batch, lazy + un-barriered)
-        # — audit that instead. inspect.unwrap follows the registry
-        # wrapper's __wrapped__ to the decorated function.
+        # constructor the operator runs per batch) — audit that
+        # instead. inspect.unwrap follows the registry wrapper's
+        # __wrapped__ to the decorated function. plan_audit() keeps
+        # every materialization lazy, so no row reads "0 shuffles" for
+        # a pipeline whose work sits behind a checkpoint.
         body = getattr(inspect.unwrap(qd.fn), "plan_audit_body", None)
-        if body is not None:
-            df = body(spark, SF_DIR)
-            name = f"{name} (driver-loop: per-batch body, un-barriered)"
-        elif has_barrier:
-            df = qd.fn(spark, SF_DIR, barrier=False)
-            name = f"{name} (un-barriered audit twin)"
-        else:
-            df = qd.fn(spark, SF_DIR)
+        lazy = name not in BUILT_MATERIALIZED
+        with plan_audit() if lazy else contextlib.nullcontext():
+            if body is not None:
+                df = body(spark, SF_DIR)
+                name = f"{name} (driver-loop: per-batch body)"
+            else:
+                df = qd.fn(spark, SF_DIR)
+        if not lazy:
+            name = f"{name} (built materialized)"
         a = audit(df._jdf.queryExecution().executedPlan().toString())
         join_s = ", ".join(
             f"{n}×{c}" for n, c in
@@ -178,12 +185,6 @@ def main() -> None:
         lines.append(row(name, qd))
     lines += [
         "",
-        "Note: queries built on eagerly-checkpointed iterations",
-        "(gr_pagerank_purchases, and any dedup path using localCheckpoint)",
-        "show only their FINAL stage here — the per-iteration join+aggregate",
-        "plans already materialized during construction; see the operator",
-        "docstrings for their per-iteration shuffle ledger.",
-        "",
         "Exchange counts are PRE-AQE and therefore overcount two benign",
         "classes: (a) byte-identical exchanges printed once per consuming",
         "branch (e.g. t_bm25_search's doc-keyed aggregate feeds both the",
@@ -194,12 +195,14 @@ def main() -> None:
         "already-aggregated metadata rows (corpus stats, codebooks) move",
         "O(1) rows.",
         "",
-        "Driver-loop rows (\"per-batch body\") audit the operator's",
-        "per-batch plan constructor fully LAZY (production eagerly",
-        "checkpoints the batch-bounded multi-consumer subtrees — the",
-        "outgoing set and the rejected-id set), so subtrees print once",
-        "per consumer here; the executed per-batch shuffle count is the",
-        "checkpointed form's, lower than this column.",
+        "Because rows are built fully LAZY, a subtree that production",
+        "materializes once (iteration state, the fuzzy ops' verify input,",
+        "a driver-loop body's outgoing and rejected-id sets) prints once per",
+        "consumer here: the executed shuffle count is the materialized",
+        "form's, lower than this column. Driver-loop rows (\"per-batch",
+        "body\") audit the operator's per-batch plan constructor. Rows",
+        "marked \"built materialized\" cannot be built lazily and show only",
+        "their FINAL stage; see BUILT_MATERIALIZED in tools/plan_report.py.",
     ]
     out = Path(__file__).resolve().parent.parent / "PLANS.md"
     out.write_text("\n".join(lines) + "\n")

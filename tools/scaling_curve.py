@@ -285,9 +285,7 @@ def main() -> None:
         # the iterative join+aggregate path measured at growing |E|
         from fabrix_spark.operators.graph import pagerank
 
-        return pagerank(
-            _synth_edges(sf_dir), iters=3, redistribute=True, checkpoint=True
-        ).count()
+        return pagerank(_synth_edges(sf_dir), iters=3, redistribute=True).count()
 
     def op_label_prop(sf_dir, m):
         # measures the per-round join+min-aggregate of the
@@ -356,6 +354,7 @@ def main() -> None:
     def warm_hot_sigs(sf_dir, m):
         if m not in _hot_sigs:
             from fabrix_spark.operators import dedup
+            from fabrix_spark.operators.util import materialize
 
             docs = spark.range(500 * m).select(
                 F.col("id").alias("doc_id"),
@@ -363,9 +362,9 @@ def main() -> None:
                     "the quick brown fox jumps over the lazy dog again and again"
                 ).alias("text"),
             )
-            _hot_sigs[m] = dedup.minhash_signatures(
-                docs, 16, 3, "text", "doc_id"
-            ).localCheckpoint(eager=True)
+            _hot_sigs[m] = materialize(
+                dedup.minhash_signatures(docs, 16, 3, "text", "doc_id")
+            )
 
     def op_lsh_hot(salt):
         # Broadcast OFF for this op: at bench scale the banded table
